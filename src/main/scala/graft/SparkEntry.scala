@@ -3015,7 +3015,7 @@ object SparkEntry {
       // pairs feeds BOTH the LPA rounds and the modularity audit —
       // materialize once so the near-dup derivation runs once, not
       // once per consumer (guide §2.4; the PairGraph discipline)
-      val pairs = Graphs.materialize(docJaccardPairs(s, dir))
+      val pairs = Materialization.materialize(docJaccardPairs(s, dir))
       val labels = Graphs.labelPropagation(bothDirs(pairs), "src", "dst",
         iterations = 3)
       Graphs.modularity(pairs, "id_a", "id_b", labels)
@@ -3418,7 +3418,7 @@ object SparkEntry {
       // the bin-join pair frame feeds conflicts AND the site frame
       // (itself read twice: anti-join probe + n_sites rollup) — three
       // plan references, so materialize the aggregate once (guide §2.4)
-      val ld = Graphs.materialize(ldSitePairs(s, dir))
+      val ld = Materialization.materialize(ldSitePairs(s, dir))
       val conflicts = ld
         .filter(PopGen.ldR2e4(col("n"), col("s1"), col("s2"),
           col("s11"), col("s22"), col("s12")) > 2000)
@@ -4252,7 +4252,7 @@ object SparkEntry {
       // here so the degree/node aggs and all three rounds read the
       // vocabulary-sized pair frame, not five re-reads of the
       // corpus-explode exchange
-      val und = Graphs.materialize(
+      val und = Materialization.materialize(
         bg.select(least(col("wa"), col("wb")).as("u"),
           greatest(col("wa"), col("wb")).as("v")).distinct())
       val edges = und.select(col("u").as("src"), col("v").as("dst"))
@@ -4270,7 +4270,7 @@ object SparkEntry {
       // has zero volume)
       // pairs feeds BOTH the LPA rounds and the conductance audit —
       // materialize once (the graph_modularity treatment)
-      val pairs = Graphs.materialize(docJaccardPairs(s, dir))
+      val pairs = Materialization.materialize(docJaccardPairs(s, dir))
       val labels = Graphs.labelPropagation(bothDirs(pairs), "src", "dst",
         iterations = 3)
       Graphs.conductance(pairs, "id_a", "id_b", labels)

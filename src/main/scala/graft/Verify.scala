@@ -20,9 +20,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that persist intermediates would otherwise hold their
-      // blocks for the remaining ~60 dumps
-      spark.catalog.clearCache()
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialization.materialize
 
 /** UCSC fixedStep wiggle parser — ConservationScoreLoader.java:22-60.
   *
@@ -21,9 +22,9 @@ import org.apache.spark.sql.functions._
   * shuffles), and (4) compute `pos = start + (idx - decl_idx - 1) * step`
   * as a narrow projection.
   *
-  * Memory/scan tradeoff: only the declaration projection is persisted
+  * Memory/scan tradeoff: only the declaration projection is materialized
   * (~1 decl per thousands of data lines). The raw input is re-scanned by
-  * the data pass instead of cached — pinning the full text to serve
+  * the data pass instead of materialized — pinning the full text to serve
   * multiple passes evicts or OOMs at 100 TB, while an extra narrow scan
   * is cheap and parallel.
   */
@@ -45,7 +46,10 @@ object Conservation {
     val idxed = lines.rdd.zipWithIndex().toDF("line", "idx")
 
     val isDecl = col("line").startsWith("fixedStep")
-    val decls = idxed.filter(isDecl)
+    // tiny projection (~1 row per thousands of input lines),
+    // materialized to serve its two consumers without rescanning the
+    // raw text
+    val decls = materialize(idxed.filter(isDecl)
       .select(col("idx").as("decl_idx"),
         regexp_extract(col("line"), "chrom=(\\S+)", 1).as("raw_chr"),
         regexp_extract(col("line"), "start=(\\d+)", 1).cast("long").as("wstart"),
@@ -53,12 +57,7 @@ object Conservation {
           .cast("long"), lit(1L)).as("step"))
       .withColumn("chr",
         when(col("raw_chr").startsWith("chr"), expr("substring(raw_chr, 4)"))
-          .otherwise(col("raw_chr")))
-      // tiny projection (~1 row per thousands of input lines), cached to
-      // serve its two consumers without rescanning the raw text; a
-      // long-lived service calling parseFixedStep repeatedly should
-      // `.unpersist()` results' lineage or periodically clear the cache
-      .cache()
+          .otherwise(col("raw_chr"))), eager = false)
 
     // Each block ends at the NEXT declaration (any chromosome — wiggle
     // blocks may interleave chrs, so a per-chr lead would be wrong).

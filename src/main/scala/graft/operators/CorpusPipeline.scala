@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialization.materialize
 
 /** Composed corpus-curation flow — the training-data twin of
   * [[VariantPipeline]]: exact dedup → quality gating → language ID →
@@ -48,9 +49,8 @@ object CorpusPipeline {
     // both sides of its candidate/verify joins and the final anti-join
     // reads it again — without the cut, the fingerprint + semi-join +
     // quality-kernel + langId upstream re-executes per reference (the
-    // plan scanned documents 8 times). Same local/cluster discipline
-    // as the pair-graph family (Graphs.materialize).
-    val withLang = Graphs.materialize(gated.withColumn("lang_pred",
+    // plan scanned documents 8 times).
+    val withLang = materialize(gated.withColumn("lang_pred",
       TextAnalysis.langId(col(textCol))))
 
     // 4. near-dup removal: drop the higher id of each candidate pair

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialization.materialize
 
 /** Corpus-curation operators a large-scale training-data pipeline needs
   * beyond dedup/similarity: repetition-based quality rules, benchmark
@@ -229,16 +230,14 @@ object Curation {
       .filter(col(idCol) === col("__mn")).drop("__fp", "__mn")
     // `gated` feeds three scans — the decontamination gram side, the
     // anti-join probe side, and (through `clean`) the sampler's stats +
-    // rate-join double pass. Persist it so the scan → dedup shuffle →
-    // gate chain runs once, not once per subtree (the anti-join sides
-    // prune different columns, so ReuseExchange can NOT collapse them).
-    // MEMORY_AND_DISK: spills instead of evicting at scale; the graft
-    // harnesses clear the cache between runs (Bench) so no measurement
-    // reads a prior run's blocks.
-    val gated = repetitionGate(deduped, textCol)
+    // rate-join double pass. Materialize it (eager = false: the dedup
+    // shuffle runs here, the first reader runs the gate stage and stores
+    // the blocks) so the scan → dedup shuffle → gate chain runs once,
+    // not once per subtree (the anti-join sides prune different
+    // columns, so ReuseExchange can NOT collapse them).
+    val gated = materialize(repetitionGate(deduped, textCol)
       .drop("n_words", "mean_word_len", "dup_word_frac", "top_bigram_frac",
-        "dup_trigram_frac")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        "dup_trigram_frac"), eager = false)
     val contaminated = decontaminate(gated, bench, idCol, textCol, decontamN)
       .select(idCol)
     val clean = gated.join(contaminated, Seq(idCol), "left_anti")

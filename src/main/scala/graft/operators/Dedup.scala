@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialization.{materialize, release}
 
 /** Deduplication family for large text corpora. Every variant is built
   * from combiner-friendly groupBys (map-side partial aggregation) and
@@ -241,7 +242,7 @@ object Dedup {
     val shingleColSpread =
       if (packed) packedShingles(col("__text"), n)
       else shingles(col("__text"), n)
-    val base = Graphs.materialize(spread.select(col("id"), col("block"),
+    val base = materialize(spread.select(col("id"), col("block"),
       shingleColSpread.as("shs")))
     val sh = base.select(col("id"), col("block"), explode(col("shs")).as("sh"))
     // candidate generation in ONE pass over the shingle pipeline: the
@@ -326,10 +327,13 @@ object Dedup {
     * simple cousin of the large-star/small-star alternation (Kiveris et
     * al. 2014, "Connected Components in MapReduce and Beyond" — public),
     * which the same loop structure upgrades to if component diameters
-    * grow at scale. `localCheckpoint` every round truncates lineage so
-    * the plan doesn't grow with iterations (the standard iterative-
-    * DataFrame requirement). Deterministic: labels are ids, min is
-    * order-free, so retries and speculative tasks can't change results.
+    * grow at scale. Every round is materialized (lazily, through
+    * [[graft.Materialization.materialize]]) so the plan doesn't grow
+    * with iterations (the standard iterative-DataFrame requirement), and
+    * released once the next round is counted, so the result holds one
+    * round's blocks, not one per round.
+    * Deterministic: labels are ids, min is order-free, so retries and
+    * speculative tasks can't change results.
     *
     * Output: (id, group_id) for every `nodes` row — singletons keep
     * group_id = own id. Throws if not converged within `maxIter` (the
@@ -399,12 +403,11 @@ object Dedup {
     // when `pairs` is an expensive derivation (the LSH-verified near-dup
     // join) only the exchanges below it are reused — the verify-side
     // join + intersect kernel ran twice per checkpoint (guide §2.4).
-    val edges = pairs.select(explode(array(
+    val edges = materialize(pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint()
-    // no checkpoint on the seed labels: the frame is a scan+project
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    // no materialization of the seed labels: the frame is a scan+project
     // (cheap to recompute the 2-3 times round 1's plan references it)
     // and the eager materialization was a whole job before round 1
     var labels = nodes.select(col(idCol).as("id"), col(idCol).as("group_id"))
@@ -415,7 +418,7 @@ object Dedup {
     // keyed exchanges) with a single groupBy(id). `old_gid` (the label
     // at the last materialization point) rides through the aggregate on
     // the self rows (each id has exactly one) so convergence stays a
-    // scan of the checkpointed result, not a join.
+    // scan of the materialized result, not a join.
     def relabel(df: DataFrame): DataFrame = {
       val contrib = df
         .select(col("id"), col("group_id"), col("old_gid"),
@@ -443,31 +446,37 @@ object Dedup {
     // exactly when a mega-component COULD have formed (guide §1.2:
     // remove passes that compute things you throw away).
     var multBound = 1L
+    // the last counted round: once the next round's blocks exist it is
+    // only that round's lineage, and is released
+    var counted: Option[DataFrame] = None
     while (!done && it < maxIter) {
-      // LAZY localCheckpoint: the convergence action is what
-      // materializes the round's blocks, so each round is ONE job
+      // LAZY materialize: the round's exchanges run when it is
+      // materialized, and the convergence action is the final-stage job
+      // that stores its blocks — no separate materializing job
       // (checkpoint-then-count as two jobs was ~2x the fixed overhead;
       // at sf0.1 a round's cost is job overhead, not data — measured
       // change counts 2019→1268→358→29→0). Nesting two relabel+jump
-      // passes per checkpoint instead made rounds MORE expensive
+      // passes per materialization instead made rounds MORE expensive
       // (3.8 s vs 3.3 s total): the jump self-join duplicates its
       // unmaterialized input subtree, so lineage depth between
-      // checkpoints must stay at one pass.
+      // materializations must stay at one pass.
       // The change count rides the materializing action as an observe()
       // metric — zero extra exchanges, the count() aggregate is
       // partial-agged per partition.
       val ob = new org.apache.spark.sql.Observation(s"cc_round_$it")
-      val jumped = labelJump(relabel(
-        labels.withColumn("old_gid", col("group_id"))), hotLabels)
-        .localCheckpoint(eager = false)
-      // ONE action: materializes the round's blocks AND carries the
+      val jumped = materialize(labelJump(relabel(
+        labels.withColumn("old_gid", col("group_id"))), hotLabels),
+        eager = false)
+      // ONE action: stores the round's blocks AND carries the
       // change count as an observe() metric over them (observe sits
-      // ABOVE the checkpoint so the metric fires inside this count's
+      // ABOVE the materialized leaf so the metric fires inside this count's
       // query execution; one in-memory pass, no exchange)
       jumped.observe(ob, coalesce(
         sum(when(col("group_id") =!= col("old_gid"), 1L).otherwise(0L)),
         lit(0L)).as("changed")).count()
       val changed = ob.get("changed").asInstanceOf[Long]
+      counted.foreach(release)
+      counted = Some(jumped)
       multBound += changed
       hotLabels = multBound > saltThreshold && {
         // bound crossed: pay the exact check (bounded: ≤ #labels rows,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialization.{materialize, release}
 
 /** Graph analytics over edge frames (the near-dup pair graph is the
   * in-house instance: [[Dedup.connectedComponents]] does the grouping;
@@ -115,7 +116,8 @@ object Graphs {
     *
     * Per round beyond [[pagerank]]'s dataflow: the iterate materializes
     * (k rounds would otherwise stack k lineage copies of the edge
-    * join) and one co-partitioned self-join computes the delta.
+    * join), one co-partitioned self-join computes the delta, and the
+    * previous iterate is released.
     *
     * @return (final ranks, rounds actually run); rounds ==
     *         maxIterations when the tolerance was never reached
@@ -144,6 +146,7 @@ object Graphs {
         .join(pr.select(col("id"), col("pr").as("pr0")), "id")
         .agg(coalesce(max(abs(col("pr") - col("pr0"))), lit(0.0)))
         .head().getDouble(0)
+      release(pr)
       pr = next
       converged = delta <= tol
     }
@@ -172,19 +175,6 @@ object Graphs {
     *
     * @return one row: (n_nodes, n_edges, n_triangles)
     */
-  /** Materialize a multiply-read derived frame. In LOCAL mode an eager
-    * `localCheckpoint` (lineage truncation, executor-local blocks) is
-    * the cheapest cut and loss-safe (one JVM). On a CLUSTER
-    * localCheckpoint blocks die with their executor and, being
-    * lineage-truncating, CANNOT be recomputed — a lost executor fails
-    * the query — so there we `persist` instead: lazily cached, lineage
-    * kept, recomputed on block loss, and the blocks are dropped by the
-    * ContextCleaner when the frame is GC'd (or by catalog.clearCache).
-    */
-  private[graft] def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint()
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
   /** Synchronous label propagation (Raghavan et al. 2007 LPA), fixed
     * iteration count, over a DIRECTED edge list (pass both directions
     * for an undirected graph — same convention as [[pagerank]]).
@@ -314,6 +304,9 @@ object Graphs {
         val next = materialize(peelRound(e, prev, k))
         val nextN = next.count()
         stable = nextN == prevN // peel is monotone: counts suffice
+        // a mid-level round is only `next`'s lineage now; the level's
+        // first frame is kept, the result reads it
+        if (prev ne alive) release(prev)
         prev = next
         prevN = nextN
       }
@@ -344,7 +337,8 @@ object Graphs {
     * saturates — never the full reached set) and one min-hop partial
     * agg unioning the running distances. Edges materialize once;
     * reached/frontier frames are node-bounded and re-materialize per
-    * round (lineage otherwise doubles each round).
+    * round (lineage otherwise doubles each round); the previous
+    * round's pair is released.
     *
     * @param seeds one column `id`; seeds absent from the edge set are
     *              still reported at hop 0
@@ -363,10 +357,15 @@ object Graphs {
         .join(e, frontier("id") === e("src"))
         .select(col("dst").as("id")).distinct()
       // nodes first reached THIS round = expansion minus already-reached
-      frontier = materialize(
+      val fresh = materialize(
         next.join(reached.select("id"), Seq("id"), "left_anti"))
-      reached = materialize(reached.union(
-        frontier.withColumn("hop", lit(r.toLong))))
+      val grown = materialize(reached.union(
+        fresh.withColumn("hop", lit(r.toLong))))
+      // the previous round is only the new frames' lineage now
+      release(reached)
+      if (r > 1) release(frontier)
+      frontier = fresh
+      reached = grown
     }
     reached
   }

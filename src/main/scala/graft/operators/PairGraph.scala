@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Materialization.materialize
 
 /** Materialize-once entry point for the document near-dup pair graph —
   * the production pattern behind the nine graded consumers
@@ -13,36 +13,33 @@ import org.apache.spark.storage.StorageLevel
   * Graded queries are deliberately self-contained, so each re-derives
   * the pair frame from the raw documents (~1.2-2.5 s each at sf0.1,
   * ~12 s of a ~125 s full run). A production caller computes the graph
-  * ONCE, persists it, and fans the analytics out over the persisted
-  * frame — the shingle explode, candidate window and verify joins are
-  * paid a single time, and every downstream op starts from a frame
-  * that is orders of magnitude smaller than the corpus (pairs ≪ docs²;
-  * at the graded scale: ~3k pairs from 5k docs).
+  * ONCE, materializes it, and fans the analytics out over the
+  * materialized frame — the shingle explode, candidate window and
+  * verify joins are paid a single time, and every downstream op starts
+  * from a frame that is orders of magnitude smaller than the corpus
+  * (pairs ≪ docs²; at the graded scale: ~3k pairs from 5k docs).
   *
-  * At 100 TB the persisted graph is the only sane shape: the pair
+  * At 100 TB the materialized graph is the only sane shape: the pair
   * derivation is the dominant cost (corpus-sized shingle pipeline),
-  * while each consumer is linear in the PAIR count. MEMORY_AND_DISK
-  * (not MEMORY_ONLY) so a huge pair graph degrades to local spill
-  * instead of silent recomputation-per-consumer — recomputation is
-  * exactly what materializing is meant to kill.
+  * while each consumer is linear in the PAIR count.
   *
-  * The spec (RoundTwelveOpsSpec) pins: persisted results are
-  * row-identical to the self-contained derivation, and a second
-  * consumer's plan reads the InMemoryRelation instead of the shingle
-  * pipeline.
+  * The spec (RoundTwelveOpsSpec) pins: materialized results are
+  * row-identical to the self-contained derivation, and a consumer's
+  * plan reads the materialized leaf instead of the shingle pipeline.
   */
 object PairGraph {
 
-  /** Build and persist the near-dup pair graph for `docs` — the
-    * [[Dedup.ngramJaccardPairs]] derivation behind a persist. Call
-    * `.unpersist()` on the returned frame when the analytics fan-out
-    * is done. */
+  /** The near-dup pair graph for `docs` — the
+    * [[Dedup.ngramJaccardPairs]] derivation, materialized with
+    * `eager = false` ([[graft.Materialization.materialize]]): the
+    * shingle and join exchanges run in this call, the first consumer's
+    * action runs the final stage and stores the blocks, and the rest
+    * read them. */
   def materializeNearDup(docs: DataFrame, idCol: String, textCol: String,
       blockCol: Column, n: Int = 3, minJaccard: Double = 0.0,
-      maxDf: Int = 8,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    Dedup.ngramJaccardPairs(docs, idCol, textCol, blockCol, n,
-      minJaccard, maxDf).persist(level)
+      maxDf: Int = 8): DataFrame =
+    materialize(Dedup.ngramJaccardPairs(docs, idCol, textCol, blockCol, n,
+      minJaccard, maxDf), eager = false)
 
   /** The materialize-once community audit — modularity, per-community
     * conductance AND the cluster-size census off ONE pair frame and ONE
@@ -70,14 +67,14 @@ object PairGraph {
     */
   def communityAudit(pairs: DataFrame, idA: String, idB: String,
       iterations: Int = 3): DataFrame = {
-    val p = Graphs.materialize(
+    val p = materialize(
       pairs.select(least(col(idA), col(idB)).as("id_a"),
         greatest(col(idA), col(idB)).as("id_b")).distinct())
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-    val labels = Graphs.materialize(
+    val labels = materialize(
       Graphs.labelPropagation(edges, "src", "dst", iterations))
-    val cond = Graphs.materialize(
+    val cond = materialize(
       Graphs.conductance(p, "id_a", "id_b", labels))
     val mod = Graphs.modularity(p, "id_a", "id_b", labels)
     val census = cond.groupBy("n_nodes")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.Materialization.materialize
 
 /** Text-analysis primitives for corpus curation: language ID, quality
   * scoring, token counting, document fingerprinting. All pure Column
@@ -411,20 +412,20 @@ object TextAnalysis {
     *
     * @return (doc_id, n_bigrams, avg_bits) — docs with ≥ 1 bigram
     */
-  /** Per-(doc, bigram) occurrence counts, lazily checkpointed — the ONE
+  /** Per-(doc, bigram) occurrence counts, materialized with
+    * `eager = false` (the first reader stores the blocks) — the ONE
     * corpus-sized tokenize+explode pass each bigram-surprisal variant
     * runs. The old shape referenced the raw exploded frame twice (the
     * model aggregate and the per-doc join don't share an exchange:
     * the aggregate's partial agg sits below its exchange, so
     * ReuseExchange never fires) and paid the explode per reference
-    * (guide §2.4). The checkpointed frame is bigram-TYPE-per-doc sized,
+    * (guide §2.4). The materialized frame is bigram-TYPE-per-doc sized,
     * and every model frame re-aggregates from it. */
   private def docBigramCounts(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
-    docs.select(col(idCol).as("doc_id"),
+    materialize(docs.select(col(idCol).as("doc_id"),
         explode(wordBigrams(col(textCol))).as("bg"))
-      .groupBy("doc_id", "bg").agg(count(lit(1)).as("k"))
-      .localCheckpoint(eager = false)
+      .groupBy("doc_id", "bg").agg(count(lit(1)).as("k")), eager = false)
 
   def bigramSurprisal(docs: org.apache.spark.sql.DataFrame, idCol: String,
                       textCol: String): org.apache.spark.sql.DataFrame = {
@@ -621,94 +622,92 @@ object TextAnalysis {
   def bpeTrain(docs: org.apache.spark.sql.DataFrame, textCol: String,
                numMerges: Int): Seq[(String, String, Long)] = {
     require(numMerges > 0, "numMerges must be positive")
-    val init = docs
+    // re-read every round; ≤ vocab rows
+    val init = materialize(docs
       .select(explode(split(normText(col(textCol)), " ")).as("w"))
       .filter(length(col("w")) > 1 && !col("w").contains("|"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(regexp_replace(col("w"), "(.)", "|$1|").as("state"),
-        col("freq"))
-      .persist() // re-read every round; ≤ vocab rows
-    try {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      var cur: org.apache.spark.sql.DataFrame = init
-      val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-      var done = false
-      for (_ <- 0 until numMerges if !done) {
-        // The pair domain is BOUNDED by construction: tokens are single
-        // chars of the normalized alphabet plus one new symbol per
-        // completed merge, so at most (|alphabet| + numMerges)² distinct
-        // (a, b) keys exist in any round. A full shuffle for that
-        // aggregate is pure stage latency (10 rounds × partial-agg →
-        // Exchange → argmax = 2 stage barriers each); instead each
-        // partition folds its states into one bounded hashmap and the
-        // driver merges the partials — the same bounded-collect
-        // discipline as the previous 1-row argmax collect, but ONE
-        // single-stage job per round. Counts are exact longs either way.
-        val partials = cur.select(col("state"), col("freq"))
-          .as[(String, Long)]
-          .mapPartitions { it =>
-            val m = new scala.collection.mutable.HashMap[String, Long]()
-            it.foreach { case (state, freq) =>
-              // state is "|tok||tok||tok|"; no symbol contains '|'
-              val body = state.substring(1, state.length - 1)
-              var st = 0
-              var prev: String = null
-              while (st <= body.length) {
-                val e0 = body.indexOf("||", st)
-                val e = if (e0 < 0) body.length else e0
-                val tok = body.substring(st, e)
-                if (prev != null) {
-                  val k = prev + "\u0000" + tok
-                  m.update(k, m.getOrElse(k, 0L) + freq)
-                }
-                prev = tok
-                st = e + 2
+        col("freq")), eager = false)
+    val spark = docs.sparkSession
+    import spark.implicits._
+    var cur: org.apache.spark.sql.DataFrame = init
+    val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
+    var done = false
+    for (_ <- 0 until numMerges if !done) {
+      // The pair domain is BOUNDED by construction: tokens are single
+      // chars of the normalized alphabet plus one new symbol per
+      // completed merge, so at most (|alphabet| + numMerges)² distinct
+      // (a, b) keys exist in any round. A full shuffle for that
+      // aggregate is pure stage latency (10 rounds × partial-agg →
+      // Exchange → argmax = 2 stage barriers each); instead each
+      // partition folds its states into one bounded hashmap and the
+      // driver merges the partials — the same bounded-collect
+      // discipline as the previous 1-row argmax collect, but ONE
+      // single-stage job per round. Counts are exact longs either way.
+      val partials = cur.select(col("state"), col("freq"))
+        .as[(String, Long)]
+        .mapPartitions { it =>
+          val m = new scala.collection.mutable.HashMap[String, Long]()
+          it.foreach { case (state, freq) =>
+            // state is "|tok||tok||tok|"; no symbol contains '|'
+            val body = state.substring(1, state.length - 1)
+            var st = 0
+            var prev: String = null
+            while (st <= body.length) {
+              val e0 = body.indexOf("||", st)
+              val e = if (e0 < 0) body.length else e0
+              val tok = body.substring(st, e)
+              if (prev != null) {
+                val k = prev + "\u0000" + tok
+                m.update(k, m.getOrElse(k, 0L) + freq)
               }
-            }
-            m.iterator
-          }.collect() // ≤ numPartitions × (|alphabet|+numMerges)² rows
-        val tot = new scala.collection.mutable.HashMap[String, Long]()
-        partials.foreach { case (k, v) =>
-          tot.update(k, tot.getOrElse(k, 0L) + v)
-        }
-        if (tot.isEmpty) done = true
-        else {
-          // argmax by (cnt desc, a asc, b asc). The NUL-joined key sorts
-          // identically to the (a, b) tuple in UTF-8 BYTE order (NUL is
-          // the lowest byte and never occurs inside a symbol); compare
-          // bytes to mirror Spark's UTF8String binary ordering exactly.
-          def lt(x: Array[Byte], y: Array[Byte]): Boolean = {
-            var i = 0
-            val n = math.min(x.length, y.length)
-            while (i < n) {
-              val c = (x(i) & 0xff) - (y(i) & 0xff)
-              if (c != 0) return c < 0
-              i += 1
-            }
-            x.length < y.length
-          }
-          var bk: String = null
-          var bb: Array[Byte] = null
-          var bc = 0L
-          tot.foreach { case (k, c) =>
-            if (bk == null || c > bc) { bk = k; bc = c; bb = null }
-            else if (c == bc) {
-              if (bb == null) bb = bk.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              val kb = k.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              if (lt(kb, bb)) { bk = k; bb = kb }
+              prev = tok
+              st = e + 2
             }
           }
-          val sep = bk.indexOf('\u0000')
-          val (a, b) = (bk.substring(0, sep), bk.substring(sep + 1))
-          merges += ((a, b, bc))
-          cur = cur.withColumn("state",
-            call_function("replace", col("state"),
-              lit("|" + a + "||" + b + "|"), lit("|" + a + b + "|")))
-        }
+          m.iterator
+        }.collect() // ≤ numPartitions × (|alphabet|+numMerges)² rows
+      val tot = new scala.collection.mutable.HashMap[String, Long]()
+      partials.foreach { case (k, v) =>
+        tot.update(k, tot.getOrElse(k, 0L) + v)
       }
-      merges.toSeq
-    } finally init.unpersist()
+      if (tot.isEmpty) done = true
+      else {
+        // argmax by (cnt desc, a asc, b asc). The NUL-joined key sorts
+        // identically to the (a, b) tuple in UTF-8 BYTE order (NUL is
+        // the lowest byte and never occurs inside a symbol); compare
+        // bytes to mirror Spark's UTF8String binary ordering exactly.
+        def lt(x: Array[Byte], y: Array[Byte]): Boolean = {
+          var i = 0
+          val n = math.min(x.length, y.length)
+          while (i < n) {
+            val c = (x(i) & 0xff) - (y(i) & 0xff)
+            if (c != 0) return c < 0
+            i += 1
+          }
+          x.length < y.length
+        }
+        var bk: String = null
+        var bb: Array[Byte] = null
+        var bc = 0L
+        tot.foreach { case (k, c) =>
+          if (bk == null || c > bc) { bk = k; bc = c; bb = null }
+          else if (c == bc) {
+            if (bb == null) bb = bk.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            val kb = k.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            if (lt(kb, bb)) { bk = k; bb = kb }
+          }
+        }
+        val sep = bk.indexOf('\u0000')
+        val (a, b) = (bk.substring(0, sep), bk.substring(sep + 1))
+        merges += ((a, b, bc))
+        cur = cur.withColumn("state",
+          call_function("replace", col("state"),
+            lit("|" + a + "||" + b + "|"), lit("|" + a + b + "|")))
+      }
+    }
+    merges.toSeq
   }
 
   /** Word-bigram token arrays of the normalized text — the composite

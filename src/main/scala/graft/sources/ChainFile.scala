@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialization.materialize
 import graft.operators.RangeJoin
 
 /** UCSC `.chain` liftover-file parser → ungapped alignment blocks.
@@ -60,7 +61,9 @@ object ChainFile {
     def tok(ts: org.apache.spark.sql.Column, i: Int) =
       when(size(ts) >= i, element_at(ts, i))
     val hts = split(trim(col("line")), "\\s+")
-    val decls = idxed.filter(isHeader)
+    // tiny projection (one row per chain), materialized for its two
+    // consumers (block-boundary lift + the data join)
+    val decls = materialize(idxed.filter(isHeader)
       .select(col("idx").as("decl_idx"),
         tok(hts, 2).cast("long").as("score"),
         tok(hts, 3).as("s_chr_raw"),
@@ -77,10 +80,7 @@ object ChainFile {
       .withColumn("t_chr",
         when(col("t_chr_raw").startsWith("chr"),
           expr("substring(t_chr_raw, 4)")).otherwise(col("t_chr_raw")))
-      .drop("s_chr_raw", "t_chr_raw")
-      // tiny projection (one row per chain), cached for its two
-      // consumers (block-boundary lift + the data join)
-      .cache()
+      .drop("s_chr_raw", "t_chr_raw"), eager = false)
 
     // boundaries come from EVERY header — quarantining a malformed
     // chain afterwards keeps its data lines from leaking into the

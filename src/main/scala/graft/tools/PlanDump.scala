@@ -37,7 +37,6 @@ object PlanDump {
           case e: Throwable =>
             System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
         }
-        spark.catalog.clearCache()
       }
     spark.stop()
   }

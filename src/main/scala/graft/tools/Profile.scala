@@ -59,11 +59,9 @@ object Profile {
       .filter { case (n, _) => only.isEmpty || only(n) }
       .foreach { case (name, fn) =>
         try {
-          spark.catalog.clearCache()
           val t0 = System.nanoTime()
           fn(spark, sfDir).count()
           val cold = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
           // settle async listener events from the cold run before reset
           Thread.sleep(300)
           c.reset()

@@ -2,8 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract smoke: every declared query runs on sf0.001 and every
-  * oracle key maps to a real query. */
+/** Entry-point smoke: every declared query runs on sf0.001, leaves
+  * nothing in the session CacheManager (graft materializes through
+  * [[Materialization]], which registers nothing there), and every oracle
+  * key maps to a real query. */
 class EntrySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -19,7 +21,9 @@ class EntrySpec extends AnyFunSuite {
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"query $name runs and returns rows on sf0.001") {
+      spark.catalog.clearCache()
       assert(fn(spark, dir).count() > 0, s"$name returned no rows")
+      assert(TestSpark.cacheManagerEmpty, s"$name left a frame in the CacheManager")
     }
   }
 }

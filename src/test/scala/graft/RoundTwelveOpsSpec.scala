@@ -91,22 +91,26 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSet
     val g = PairGraph.materializeNearDup(docs, "doc_id", "text",
       blockCol = block, n = 3, minJaccard = 0.2)
-    try {
-      val persisted = g.select("id_a", "id_b", "jaccard")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(persisted == selfContained && persisted.nonEmpty)
-      // a downstream consumer's plan must read the cache, not re-run
-      // the shingle pipeline
-      val consumer = g.select(col("id_a").as("id"))
-        .union(g.select(col("id_b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("degree"))
-        .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-      val cached = consumer.queryExecution.optimizedPlan.collect {
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
-      }
-      assert(cached.nonEmpty, "consumer plan does not hit the cache")
-      assert(consumer.count() > 0)
-    } finally g.unpersist()
+    val materialized = g.select("id_a", "id_b", "jaccard")
+      .as[(Long, Long, Double)].collect().toSet
+    assert(materialized == selfContained && materialized.nonEmpty)
+    // a downstream consumer's plan must read the materialized leaf, not
+    // re-run the shingle pipeline
+    val consumer = g.select(col("id_a").as("id"))
+      .union(g.select(col("id_b").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("degree"))
+      .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
+    val plan = consumer.queryExecution.optimizedPlan
+    val leaves = plan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }
+    assert(leaves.nonEmpty, "consumer plan does not read the materialized leaf")
+    val shingleKernels = plan.flatMap(_.expressions.flatMap(_.collect {
+      case k: graft.functions.CharShingles => k
+      case k: graft.functions.PackedCharShingles => k
+    }))
+    assert(shingleKernels.isEmpty, "consumer plan re-runs the shingle kernel")
+    assert(consumer.count() > 0)
   }
 
   test("corenessDecomposition: hand graphs; graded peel is its prefix") {
